@@ -22,6 +22,13 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
 
 
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 48g: a heap ceiling above the
+    box's memory lets a local driver JVM grow until the kernel kills it."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (2 << 20)
+    return f"{min(half_mb, 48 << 10)}m"
+
+
 def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) -> SparkSession:
     """Build a local SparkSession sized for this machine (tests / bench)."""
     n = int(cpus or default_parallelism())
@@ -39,7 +46,10 @@ def get_spark(app_name: str = "sqlitedataframe-spark", cpus: int | None = None) 
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -96,7 +106,8 @@ def tune(spark: SparkSession) -> SparkSession:
 
 def ensure_worker_imports(spark: SparkSession) -> None:
     """Make this package importable on Python WORKER processes regardless
-    of the driver's cwd (idempotent; called from io.load_table).
+    of the driver's cwd (idempotent; called from io.load_table and from the
+    SQLite bridge's read registration and write sink).
 
     cloudpickle ships mapInPandas/pandas_udf closures by value, but any
     module-level helper they reference (the PNG codec, decode helpers) is

@@ -12,17 +12,20 @@ Read path (reference A1-A7):
   override, ``columns`` allowlist, ``.any`` fallback (:354-394, §1.3).
 - Cell decode incl. bool !=0, 3-format dates, `.any`->string (:432-531).
 
-Write path (reference A8-A11):
+Write path (reference A8-A11), one sink for every form:
 - ``write_sql(df, db, table=..., if_exists=...)`` — DDL generation from the
-  Spark schema (:741-771) + partition-parallel batched INSERTs; the four
+  Spark schema (:741-771), then the sink with a generated INSERT; the four
   exists-policies map 1:1 to Spark SaveMode (:197-206).
-- ``write_sql(df, db, statement=...)`` — arbitrary parameterized DML executed
-  per row (positional binds; extra params NULL, extra columns truncated —
-  :572-591) via foreachPartition.
+- ``write_sql(df, db, statement=...)`` / ``upsert_sql`` — arbitrary
+  parameterized DML executed per row (positional binds; extra params NULL,
+  extra columns truncated — :572-591).
+
+The data source is read-only: every write runs through ``_sink`` — one
+``executemany`` per partition via foreachPartition.
 
 Scale note: a single SQLite file is an inherently single-node sink/source;
-the bridge parallelizes reads via rowid ranges and batches writes per
-partition inside one transaction (the reference steps one row per implicit
+the bridge parallelizes reads via rowid ranges and writes each partition
+inside one transaction (the reference steps one row per implicit
 transaction — its known perf cliff, §3). On a cluster the db file must be on
 a shared filesystem; the parquet path is the 100 TB path.
 """
@@ -35,13 +38,7 @@ import sqlite3
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from sqlitedataframe_spark.errors import (
@@ -49,7 +46,7 @@ from sqlitedataframe_spark.errors import (
     TableExistsError,
     UnknownColumnError,
 )
-from sqlitedataframe_spark.session import tune
+from sqlitedataframe_spark.session import ensure_worker_imports, tune
 from sqlitedataframe_spark.sqlite_types import (
     SQLiteType,
     affinity,
@@ -65,7 +62,6 @@ _DEFAULT_READ_PARTITIONS = 8
 #: parallelism gain. 10k rows per slice keeps executor tasks meaningful at
 #: scale while tiny tables collapse to one cursor.
 _MIN_ROWS_PER_PARTITION = 10_000
-_WRITE_BATCH = 1000
 
 
 def _connect(path: str) -> sqlite3.Connection:
@@ -240,49 +236,8 @@ class SQLiteReader(DataSourceReader):
             conn.close()
 
 
-class SQLiteCommit(WriterCommitMessage):
-    pass
-
-
-class SQLiteWriter(DataSourceWriter):
-    def __init__(self, options: dict, schema: StructType):
-        self.path = options["path"]
-        self.table = options["table"]
-        self.columns = [f.name for f in schema.fields]
-
-    def write(self, rows: Iterator) -> SQLiteCommit:
-        # Partition-parallel batched INSERT inside one transaction per batch:
-        # the scalable replacement for the reference's one-step-per-row loop
-        # (SQLiteDataFrame.swift:579-590). Writers serialize on SQLite's file
-        # lock; busy_timeout makes that safe.
-        conn = _connect(self.path)
-        try:
-            placeholders = ", ".join("?" for _ in self.columns)
-            cols = ", ".join(f'"{c}"' for c in self.columns)
-            stmt = f'INSERT INTO "{self.table}" ({cols}) VALUES ({placeholders})'
-            batch = []
-            for row in rows:
-                batch.append(tuple(encode_cell(v) for v in row))
-                if len(batch) >= _WRITE_BATCH:
-                    with conn:
-                        conn.executemany(stmt, batch)
-                    batch = []
-            if batch:
-                with conn:
-                    conn.executemany(stmt, batch)
-        finally:
-            conn.close()
-        return SQLiteCommit()
-
-    def commit(self, messages):  # noqa: D102 — sink has no global commit step
-        return None
-
-    def abort(self, messages):  # noqa: D102
-        return None
-
-
 class SQLiteDataSource(DataSource):
-    """``spark.read.format("sqlite")`` / ``df.write.format("sqlite")``."""
+    """``spark.read.format("sqlite")`` (read-only: writes go through ``_sink``)."""
 
     @classmethod
     def name(cls) -> str:
@@ -296,15 +251,13 @@ class SQLiteDataSource(DataSource):
     def reader(self, schema: StructType) -> SQLiteReader:
         return SQLiteReader(self.options, schema)
 
-    def writer(self, schema: StructType, overwrite: bool) -> SQLiteWriter:
-        return SQLiteWriter(self.options, schema)
-
 
 def _register(spark: SparkSession) -> None:
-    try:
-        spark.dataSource.register(SQLiteDataSource)
-    except Exception:
-        pass  # already registered
+    # Workers unpickle SQLiteDataSource by reference, so they must import
+    # this package; registering snapshots the shipped python includes, so
+    # ship first. Re-registering replaces the entry without error.
+    ensure_worker_imports(spark)
+    spark.dataSource.register(SQLiteDataSource)
 
 
 # ===========================================================================
@@ -530,54 +483,107 @@ def write_sql(
     """
     if (table is None) == (statement is None):
         raise ValueError("exactly one of table= or statement= is required")
+    if table is not None:
+        if if_exists not in _IF_EXISTS:
+            raise ValueError(f"if_exists must be one of {_IF_EXISTS}")
+        conn = _connect(db_path)
+        try:
+            exists = _exists(conn, table)
+            if exists:
+                if if_exists == "fail":
+                    raise TableExistsError(f"table {table!r} already exists")
+                if if_exists == "ignore":
+                    return
+                if if_exists == "replace":
+                    with conn:
+                        conn.execute(f'DROP TABLE "{table}"')
+                    exists = False
+            if not exists:
+                decls = ", ".join(ddl_decl(f) for f in df.schema.fields)
+                with conn:
+                    conn.execute(f'CREATE TABLE "{table}" ({decls})')
+        finally:
+            conn.close()
+        statement = _insert_into(table, df.columns)
+    _sink(df, db_path, statement)
 
-    if statement is not None:
-        n_params = _bind_param_count(statement)
-        cols = df.columns
 
-        def run_partition(rows):
+def _insert_into(table: str, cols: Sequence[str]) -> str:
+    names = ", ".join(f'"{c}"' for c in cols)
+    marks = ", ".join("?" for _ in cols)
+    return f'INSERT INTO "{table}" ({names}) VALUES ({marks})'
+
+
+def _sink(df: DataFrame, db_path: str, statement: str) -> None:
+    """Execute ``statement`` once per row of ``df`` (reference
+    writeSQL(statement:), SQLiteDataFrame.swift:572-591): positional binds,
+    extra statement params bind NULL, extra columns are dropped.
+
+    Each partition is ONE ``executemany`` inside ONE transaction opened by
+    ``_begin_write``, so a failed or killed task commits nothing and Spark's
+    task retry re-runs it cleanly. Writers from different partitions
+    serialize on SQLite's file lock; each holds it only while it copies its
+    staged rows in, and that copy must finish within the 60 s busy_timeout
+    of the writers queued behind it.
+    """
+    ensure_worker_imports(df.sparkSession)
+    n_params = _bind_param_count(statement)
+    pad = (None,) * n_params
+    stage_ddl = "CREATE TABLE b (k INTEGER PRIMARY KEY"
+    stage_ddl += "".join(f", c{i}" for i in range(n_params)) + ")"
+    stage_insert = "INSERT INTO b VALUES (NULL" + ", ?" * n_params + ")"
+
+    def run_partition(rows):
+        # Stage the encoded rows in a private temporary database (spills to
+        # disk past SQLite's page cache) so the write lock covers only the
+        # copy into ``db_path``, not the time Spark takes to compute them.
+        # ``k`` replays them in frame order: an upsert that meets one key
+        # twice in a partition must keep the later row.
+        stage = sqlite3.connect("")
+        try:
+            stage.execute(stage_ddl)
+            staged = stage.executemany(
+                stage_insert,
+                ((tuple(map(encode_cell, row)) + pad)[:n_params] for row in rows),
+            ).rowcount
+            if not staged:
+                return  # an empty partition never queues for the write lock
             conn = _connect(db_path)
             try:
+                _begin_write(conn)
                 with conn:
-                    for row in rows:
-                        vals = [encode_cell(v) for v in row]
-                        bound = (vals + [None] * n_params)[:n_params]
-                        conn.execute(statement, bound)
+                    conn.executemany(
+                        statement, (r[1:] for r in stage.execute("SELECT * FROM b ORDER BY k"))
+                    )
             finally:
                 conn.close()
+        finally:
+            stage.close()
 
-        df.select(*cols).foreachPartition(run_partition)
-        return
+    df.foreachPartition(run_partition)
 
-    if if_exists not in _IF_EXISTS:
-        raise ValueError(f"if_exists must be one of {_IF_EXISTS}")
-    conn = _connect(db_path)
-    try:
-        exists = _exists(conn, table)
-        if exists:
-            if if_exists == "fail":
-                raise TableExistsError(f"table {table!r} already exists")
-            if if_exists == "ignore":
-                return
-            if if_exists == "replace":
-                with conn:
-                    conn.execute(f'DROP TABLE "{table}"')
-                exists = False
-        if not exists:
-            decls = ", ".join(ddl_decl(f) for f in df.schema.fields)
-            with conn:
-                conn.execute(f'CREATE TABLE "{table}" ({decls})')
-    finally:
-        conn.close()
 
-    _register(df.sparkSession)
-    (
-        df.write.format("sqlite")
-        .mode("append")
-        .option("path", db_path)
-        .option("table", table)
-        .save()
-    )
+def _begin_write(conn: sqlite3.Connection) -> None:
+    """Open a transaction that holds SQLite's write lock before any row.
+
+    An explicit ``BEGIN IMMEDIATE`` covers every statement form: the driver
+    opens no implicit transaction for ``WITH … INSERT`` and would autocommit
+    it row by row. A writer queued behind other partitions may wait for
+    several of their transactions in turn, so one 60 s busy_timeout
+    (``_connect``) is not its limit: it retries while the file's
+    ``data_version`` shows other writers committing, and fails only after
+    60 s in which nobody committed.
+    """
+    seen = conn.execute("PRAGMA data_version").fetchone()[0]
+    while True:
+        try:
+            conn.execute("BEGIN IMMEDIATE")
+            return
+        except sqlite3.OperationalError as e:
+            now = conn.execute("PRAGMA data_version").fetchone()[0]
+            if e.sqlite_errorcode & 0xFF != sqlite3.SQLITE_BUSY or now == seen:
+                raise
+            seen = now
 
 
 def upsert_sql(df: DataFrame, db_path: str, table: str, key_cols: Sequence[str]) -> None:
@@ -588,26 +594,20 @@ def upsert_sql(df: DataFrame, db_path: str, table: str, key_cols: Sequence[str])
     :541-545; this is the composed idiom).
 
     Requires a UNIQUE index / PK on ``key_cols`` (SQLite's ON CONFLICT
-    contract). Executes partition-parallel, batched in transactions.
+    contract). Executes partition-parallel, one transaction per partition.
     """
     cols = df.columns
     missing = [k for k in key_cols if k not in cols]
     if missing:
         raise ValueError(f"key columns {missing} not in DataFrame")
     non_keys = [c for c in cols if c not in key_cols]
-    col_list = ", ".join(f'"{c}"' for c in cols)
-    placeholders = ", ".join("?" for _ in cols)
     conflict = ", ".join(f'"{k}"' for k in key_cols)
     if non_keys:
         updates = ", ".join(f'"{c}" = excluded."{c}"' for c in non_keys)
         action = f"DO UPDATE SET {updates}"
     else:
         action = "DO NOTHING"
-    stmt = (
-        f'INSERT INTO "{table}" ({col_list}) VALUES ({placeholders}) '
-        f"ON CONFLICT ({conflict}) {action}"
-    )
-    write_sql(df, db_path, statement=stmt)
+    _sink(df, db_path, f"{_insert_into(table, cols)} ON CONFLICT ({conflict}) {action}")
 
 
 def table_exists(db_path: str, table: str) -> bool:

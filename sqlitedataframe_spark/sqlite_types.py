@@ -275,6 +275,11 @@ def encode_cell(value):
     if isinstance(value, float):
         return value
     if isinstance(value, Decimal):
+        # A scaled decimal (every value of a DecimalType(p, s>0) column, 7 as
+        # 7.00 too) binds its exact plain text, so one column keeps one
+        # storage class; scale 0 is the UInt64 stand-in: int64 or its text.
+        if value.as_tuple().exponent < 0:
+            return format(value, "f")
         i = int(value)
         return i if -(1 << 63) <= i <= INT64_MAX else str(i)
     if isinstance(value, (dt.datetime,)):

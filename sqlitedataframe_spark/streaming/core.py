@@ -223,8 +223,8 @@ def stream_to_sqlite(
     checkpoint: str | None = None,
 ):
     """Stream into the SQLite bridge via ``foreachBatch``: each micro-batch
-    appends through write_sql (DDL on first batch, batched transactional
-    inserts). foreachBatch is the idiomatic sink adapter for targets without
+    appends through write_sql (DDL on first batch, one transaction per
+    partition). foreachBatch is the idiomatic sink adapter for targets without
     a native streaming writer; exactly-once follows from the checkpoint +
     idempotent-append contract the caller chooses.
 

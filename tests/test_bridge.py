@@ -5,7 +5,13 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sqlite3
+import subprocess
+import sys
+import threading
+import time
+from decimal import Decimal
 
 import pytest
 
@@ -15,6 +21,7 @@ from pyspark.sql import Row, functions as F, types as ST
 
 from sqlitedataframe_spark.errors import TableExistsError, UnknownColumnError
 from sqlitedataframe_spark.sources.sqlite import (
+    _begin_write,
     exec_sql,
     read_sql,
     table_exists,
@@ -397,3 +404,124 @@ def test_pushdown_results_match_dirty_storage(spark, db_path):
     # conjunction of pushable + unpushable filters ('7' < 'a': only
     # "alphabet" survives the unpushed string-range predicate)
     assert df.filter((F.col("i") > 5) & (F.col("s") > "a")).count() == 1
+
+
+# -- the write sink: exact decimals, one transaction per partition, worker
+#    imports from a driver started outside the repository ----------------------
+def test_write_fractional_decimal_binds_exact_text(spark, db_path):
+    """A scaled decimal column binds every value as its exact plain text —
+    never a truncated int, never exponent form — so the column holds one
+    storage class and numeric comparisons rank 7 below 12.50 below 100."""
+    schema = ST.StructType([
+        ST.StructField("amount", ST.DecimalType(20, 2)),
+        ST.StructField("rate", ST.DecimalType(38, 18)),
+    ])
+    rows = [(Decimal("12.50"), Decimal("1E-7")), (Decimal("7"), Decimal("2")),
+            (Decimal("100"), Decimal("0.5"))]
+    write_sql(spark.createDataFrame(rows, schema), db_path, table="money")
+    conn = sqlite3.connect(db_path)
+    kinds = conn.execute("SELECT DISTINCT typeof(amount), typeof(rate) FROM money").fetchall()
+    ranked = conn.execute("SELECT amount, rate FROM money ORDER BY amount + 0").fetchall()
+    over_10 = conn.execute("SELECT amount FROM money WHERE amount + 0 > 10 ORDER BY 1").fetchall()
+    conn.close()
+    assert kinds == [("text", "text")]
+    assert ranked == [("7.00", "2.000000000000000000"),
+                      ("12.50", "0.000000100000000000"),
+                      ("100.00", "0.500000000000000000")]
+    assert over_10 == [("100.00",), ("12.50",)]
+
+
+@pytest.mark.parametrize("form", ["table", "with_insert"])
+def test_write_partition_is_one_transaction(spark, db_path, form):
+    """A partition whose row 1500 breaks a UNIQUE index commits none of its
+    rows, so a task retry never re-inserts an already-committed prefix —
+    for a ``WITH … INSERT`` statement too, which Python's sqlite3 driver
+    would otherwise autocommit row by row."""
+    exec_sql(db_path, "CREATE TABLE u (k INT); CREATE UNIQUE INDEX u_k ON u (k);"
+                      "INSERT INTO u VALUES (-1);")
+    df = spark.range(0, 2000, numPartitions=1).select(
+        F.when(F.col("id") == 1499, -1).otherwise(F.col("id")).alias("k")
+    )
+    target = (
+        {"table": "u", "if_exists": "append"}
+        if form == "table"
+        else {"statement": "WITH v(k) AS (SELECT ?) INSERT INTO u SELECT k FROM v"}
+    )
+    with pytest.raises(Exception, match="UNIQUE constraint failed"):
+        write_sql(df, db_path, **target)
+    conn = sqlite3.connect(db_path)
+    assert conn.execute("SELECT COUNT(*) FROM u").fetchone()[0] == 1
+    conn.close()
+
+
+def test_begin_write_outlasts_a_queue_of_writers(tmp_path):
+    """A writer queued behind several transactions whose total exceeds its
+    busy timeout gets the lock while they keep committing; it fails once the
+    lock is held for a whole timeout with no commit."""
+    path = str(tmp_path / "q.db")
+    exec_sql(path, "CREATE TABLE q (k INT)")
+    holder = sqlite3.connect(path, timeout=10, check_same_thread=False)
+    waiter = sqlite3.connect(path, timeout=0.5)
+    locked = threading.Event()
+
+    def hold(n, secs, commit=True):
+        for i in range(n):
+            holder.execute("BEGIN IMMEDIATE")
+            holder.execute("INSERT INTO q VALUES (?)", (i,))
+            locked.set()
+            time.sleep(secs)
+            if commit:
+                holder.commit()
+            else:
+                holder.rollback()
+
+    t = threading.Thread(target=hold, args=(8, 0.2))
+    t.start()
+    locked.wait()
+    _begin_write(waiter)  # 8 x 0.2 s ahead of a 0.5 s busy timeout
+    waiter.rollback()
+    t.join()
+
+    locked.clear()
+    t = threading.Thread(target=hold, args=(1, 1.5, False))
+    t.start()
+    locked.wait()
+    with pytest.raises(sqlite3.OperationalError, match="locked"):
+        _begin_write(waiter)
+    t.join()
+    holder.close()
+    waiter.close()
+
+
+_OUTSIDE_DRIVER = """
+import sqlite3, sys
+sys.path.insert(0, sys.argv[1])
+from sqlitedataframe_spark.session import get_spark
+from sqlitedataframe_spark.sources.sqlite import read_sql, write_sql
+
+spark = get_spark("outside-driver", cpus=1)
+if sys.argv[2] == "read_sql":
+    conn = sqlite3.connect("t.db")
+    conn.executescript("CREATE TABLE t (k INT, s TEXT); INSERT INTO t VALUES (1, 'a');")
+    conn.close()
+    got = [tuple(r) for r in read_sql(spark, "t.db", table="t").collect()]
+else:
+    write_sql(spark.createDataFrame([(1, "a")], ["k", "s"]), "t.db", table="t")
+    got = sqlite3.connect("t.db").execute("SELECT k, s FROM t").fetchall()
+spark.stop()
+assert got == [(1, "a")], got
+"""
+
+
+@pytest.mark.parametrize("first_call", ["read_sql", "write_sql"])
+def test_bridge_from_driver_outside_repo(tmp_path, first_call):
+    """A driver started elsewhere, with the package on sys.path only (not on
+    PYTHONPATH), must reach it on the Python workers too."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", _OUTSIDE_DRIVER, repo, first_call],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]

@@ -137,6 +137,10 @@ def test_encode_uint64_overflow_to_text():
     assert encode_cell(INT64_MAX) == INT64_MAX
     assert encode_cell(INT64_MAX + 1) == str(INT64_MAX + 1)
     assert encode_cell(Decimal(2**64 - 1)) == str(2**64 - 1)
+    # a scaled decimal: exact plain text, integral values included
+    assert encode_cell(Decimal("12.50")) == "12.50"
+    assert encode_cell(Decimal("7.00")) == "7.00"
+    assert encode_cell(Decimal("1.00000000000E-7")) == "0.000000100000000000"
 
 
 def test_encode_date_as_text():
